@@ -6,7 +6,9 @@
 #   make oracle    - scripts/check_correctness.py, full registry, sf0.01
 #   make plans     - regenerate tests/plan_snapshots.json (review the diff!)
 #   make bench     - bench.py at $SPARK_GRAFT_SF_DIR (default sf0.1)
-#   make check     - test + oracle (the full triple: plan gate runs inside pytest)
+#   make benchtest - perfbench's own tests (no Spark, seconds): catches
+#                    drift between BENCHMARK.json and perfbench/
+#   make check     - test + benchtest + oracle (the plan gate runs inside pytest)
 #   make close     - the round-closing gate (see CLOSING PROTOCOL below)
 #
 # CLOSING PROTOCOL (added round 9 after the round-8 stale-snapshot slip:
@@ -24,10 +26,10 @@
 
 PY ?= python
 
-.PHONY: check test oracle plans bench close
+.PHONY: check test benchtest oracle plans bench close
 
-check: test oracle
-	@echo "CHECK GREEN: pytest + plan gate + full oracle mirror"
+check: benchtest test oracle
+	@echo "CHECK GREEN: pytest + perfbench tests + plan gate + full oracle mirror"
 
 close: check
 	@git status --short | grep -q . && echo "CLOSE: WARNING uncommitted changes present" || true
@@ -35,6 +37,9 @@ close: check
 
 test:
 	$(PY) -m pytest tests/ -q
+
+benchtest:
+	$(PY) -m pytest perfbench/tests -q
 
 oracle:
 	$(PY) scripts/check_correctness.py /root/testdata/sf0.01

@@ -24,18 +24,21 @@ def run_concurrently(*thunks):
     paths and history reads are fenced to strictly-earlier partitions).
     ``InheritableThread`` propagates and cleans up JVM thread-locals
     (job descriptions, scheduler pools) per the PySpark threading
-    contract. The first exception propagates after every thread has
-    joined, so no action is left silently running."""
+    contract. Errors propagate after every thread has joined, so no
+    action is left silently running: the lowest-index thunk's exception
+    is raised whatever order the threads failed in, with every other
+    failure chained onto it (an exception group, in thunk order, at the
+    end of its ``__context__`` chain)."""
     from pyspark import InheritableThread
 
     results: list = [None] * len(thunks)
-    errors: list[BaseException] = []
+    errors: list[BaseException | None] = [None] * len(thunks)
 
     def _run(i: int, fn) -> None:
         try:
             results[i] = fn()
         except BaseException as ex:  # noqa: BLE001 — crosses threads
-            errors.append(ex)
+            errors[i] = ex
 
     threads = [
         InheritableThread(target=_run, args=(i, fn))
@@ -45,6 +48,14 @@ def run_concurrently(*thunks):
         t.start()
     for t in threads:
         t.join()
-    if errors:
-        raise errors[0]
+    failed = [ex for ex in errors if ex is not None]
+    if len(failed) > 1:
+        tail = failed[0]
+        while tail.__context__ is not None:
+            tail = tail.__context__
+        tail.__context__ = BaseExceptionGroup(
+            "other concurrent failures", failed[1:]
+        )
+    if failed:
+        raise failed[0]
     return results

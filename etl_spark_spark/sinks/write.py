@@ -91,8 +91,9 @@ def write_range_sorted(
     query touches only the files that cover it. This is the
     single-column z-order degenerate case — for one predicate column,
     plain range clustering IS the optimal layout (true multi-column
-    z-order needs bit-interleaving; compose ``order_by`` with the
-    leading column first for the common prefix-filter case).
+    z-order needs bit-interleaving, see ``sinks.zorder``; compose
+    ``order_by`` with the leading column first for the common
+    prefix-filter case).
 
     One shuffle (the range exchange, driven by a sample pass), then a
     partition-local sort that spills gracefully — no global sort, no
@@ -105,83 +106,6 @@ def write_range_sorted(
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.save(path)
-
-
-def zorder_key(
-    normalized: Sequence["object"], bits: int = 16
-):
-    """Interleave the bits of pre-normalized integer columns (each in
-    [0, 2**bits)) into one long z-value: bit b of column j lands at
-    position ``b * n_cols + j``. 2 cols x 16 bits = a 32-bit z in a
-    long — a pure expression, no UDF."""
-    from pyspark.sql import functions as F
-
-    n = len(normalized)
-    z = F.lit(0).cast("long")
-    for b in range(bits):
-        for j, c in enumerate(normalized):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(c, b).bitwiseAND(F.lit(1)), b * n + j)
-            )
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    num_files: int = 32,
-    bits: int = 16,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Write with a MULTI-column z-order clustered layout (the Delta
-    ``OPTIMIZE ZORDER BY`` capability, built from expressions): each
-    column is min/max-normalized to ``bits`` bits, the bits are
-    interleaved into one z-value, and files are range-partitioned +
-    sorted on it. Each output file then covers a small HYPER-RECTANGLE
-    of the key space, so footer min/max stats discriminate on EVERY
-    ``cols`` member — range clustering on one column can't do that for
-    predicates on the others.
-
-    Cost at 100 TB: one tiny min/max aggregate (broadcast back), one
-    range exchange, one local sort — same shape as
-    ``write_range_sorted``, plus ~``bits * len(cols)`` bitwise ops per
-    row (codegen-side). Normalization is value-linear; heavily skewed
-    columns cluster better with a rank/quantile transform first
-    (compose with ``F.ntile`` or a precomputed CDF if needed).
-    """
-    from pyspark.sql import functions as F
-
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-    stats = df.agg(*aggs)
-    joined = df.crossJoin(F.broadcast(stats))
-    top = (1 << bits) - 1
-    normalized = []
-    for c in cols:
-        mn = F.col(f"__mn_{c}").cast("double")
-        mx = F.col(f"__mx_{c}").cast("double")
-        span = mx - mn
-        scaled = F.when(
-            span > 0,
-            F.least(
-                F.lit(top).cast("long"),
-                F.floor(
-                    (F.col(c).cast("double") - mn) / span * F.lit(float(1 << bits))
-                ).cast("long"),
-            ),
-        ).otherwise(F.lit(0).cast("long"))
-        normalized.append(scaled)
-    z = zorder_key(normalized, bits)
-    clustered = (
-        joined.withColumn("__z", z)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z", *[f"__mn_{c}" for c in cols], *[f"__mx_{c}" for c in cols])
-    )
-    clustered.write.format(fmt).mode(mode).save(path)
 
 
 def upsert(

@@ -104,7 +104,7 @@ def read_date_range_indexed(
     :func:`read_date_range`'s exact half-open residual filter — the
     first-class form of "don't even open files outside the window" for
     non-Hive-partitioned layouts (a range-sorted or z-ordered feed,
-    ``sinks.write.write_range_sorted`` / ``sinks.zorder``).
+    ``sinks.write.write_range_sorted`` / ``sinks.zorder.write_zordered``).
 
     Pruning keeps every file whose [min, max] overlaps
     [start, end + 1 day] — a superset of the half-open window, so the
@@ -112,23 +112,11 @@ def read_date_range_indexed(
     Returns a ``stats_index.PrunedScan`` (df, n_files_read,
     n_files_total). Pass a persisted ``index`` to skip the stats scan.
     """
-    from .stats_index import PrunedScan, build_stats_index, prune_files
+    from .stats_index import _pruned_scan
 
-    idx = index if index is not None else build_stats_index(
-        spark, path, [date_col]
-    )
-    idx = idx.localCheckpoint()  # pin: prune + count read the same stats
-    total = idx.count()
-    files = prune_files(
-        idx,
-        date_col,
-        start.isoformat(),
-        (end + dt.timedelta(days=1)).isoformat(),
-    )
-    if not files:
-        return PrunedScan(spark.read.parquet(path).limit(0), 0, total)
-    df = read_date_range(spark.read.parquet(*files), date_col, start, end)
-    return PrunedScan(df, len(files), total)
+    window = (start.isoformat(), (end + dt.timedelta(days=1)).isoformat())
+    scan = _pruned_scan(spark, path, {date_col: window}, index)
+    return scan._replace(df=read_date_range(scan.df, date_col, start, end))
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

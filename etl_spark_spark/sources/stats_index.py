@@ -9,20 +9,24 @@ directories. Two pieces:
   ``input_file_name()`` — the aggregate output is proportional to the
   file count, not the row count, so the index for a 100 TB table with
   100k files is 100k tiny rows.
-- :func:`pruned_parquet_read` consults the index and reads ONLY the
-  files whose [min, max] range overlaps the requested interval. The
-  surviving file list is collected to the driver — bounded by file
-  count (the same list Spark's own FileIndex holds), never by data.
+- :func:`indexed_read` consults the index and reads ONLY the files
+  whose [min, max] ranges overlap every requested interval, then
+  applies the exact residual row filter. The surviving file list is
+  collected to the driver — bounded by file count (the same list
+  Spark's own FileIndex holds), never by data. The S4 date-window form
+  (``sources.parquet.read_date_range_indexed``) shares the same
+  pruning step, so both prune in ONE job.
 
-Works best on range-sorted / Hive-partitioned layouts (see
-``sinks.write.write_range_sorted``): sorted layout → disjoint per-file
-ranges → most files skipped. On a randomly-laid-out table every file
-overlaps and pruning honestly degrades to a full read (correct, just
-not faster) — same behavior as any min/max zone map.
+Works best on range-sorted or z-ordered layouts (see
+``sinks.write.write_range_sorted`` and ``sinks.zorder.write_zordered``):
+clustered layout → (near-)disjoint per-file ranges → most files
+skipped. On a randomly-laid-out table every file overlaps and pruning
+honestly degrades to a full read (correct, just not faster) — same
+behavior as any min/max zone map.
 
-The caller must still apply the residual row-level filter; file
-skipping is a superset guarantee (every matching row lives in a kept
-file), exactly like parquet row-group stats one level up.
+File skipping alone is a superset guarantee (every matching row lives
+in a kept file), exactly like parquet row-group stats one level up;
+the residual filter restores exact semantics.
 """
 
 from __future__ import annotations
@@ -32,60 +36,31 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def build_stats_index(
     spark: SparkSession, path: str, columns: Sequence[str]
 ) -> DataFrame:
-    """One row per physical file: (file, n_rows, min_<c>, max_<c>...)."""
+    """One row per physical file: (file, n_rows, min_<c>, max_<c>...).
+    The table schema rides along as metadata of the ``file`` column, so
+    a pruned read of the kept files needs no schema-inference job."""
     df = spark.read.parquet(path)
-    return df.groupBy(F.input_file_name().alias("file")).agg(
+    file = F.input_file_name().alias(
+        "file", metadata={"schema": df.schema.jsonValue()}
+    )
+    return df.groupBy(file).agg(
         F.count("*").alias("n_rows"),
         *[F.min(c).alias(f"min_{c}") for c in columns],
         *[F.max(c).alias(f"max_{c}") for c in columns],
     )
 
 
-def prune_files(index: DataFrame, column: str, lo, hi) -> list[str]:
-    """File paths whose [min, max] overlaps [lo, hi] (NULL-stat files
-    are conservatively kept)."""
-    keep = index.filter(
-        (F.col(f"max_{column}").isNull() | (F.col(f"max_{column}") >= lo))
-        & (F.col(f"min_{column}").isNull() | (F.col(f"min_{column}") <= hi))
-    )
-    return [r["file"] for r in keep.select("file").collect()]
-
-
-def pruned_parquet_read(
-    spark: SparkSession,
-    path: str,
-    column: str,
-    lo,
-    hi,
-    index: DataFrame | None = None,
-) -> tuple[DataFrame, int, int]:
-    """Read only the files that can contain ``column`` values in
-    [lo, hi]. Returns (df, n_files_read, n_files_total).
-
-    Pass a persisted ``index`` (from :func:`build_stats_index`, e.g.
-    refreshed per ingestion batch) to skip the stats scan; without one
-    the index is built on the fly, which still pays off when the same
-    index serves many point/range reads.
-    """
-    idx = index if index is not None else build_stats_index(spark, path, [column])
-    idx = idx.localCheckpoint()  # pin: prune + count read the same stats
-    total = idx.count()
-    files = prune_files(idx, column, lo, hi)
-    if not files:
-        empty = spark.read.parquet(path).limit(0)
-        return empty, 0, total
-    return spark.read.parquet(*files), len(files), total
-
-
 class PrunedScan(NamedTuple):
-    """Result of :func:`indexed_read`: the DataFrame already carries
-    the residual row filters (exact semantics, not a superset); the
-    file counts expose the skipping for tests/telemetry to pin."""
+    """Result of :func:`indexed_read` and
+    ``sources.parquet.read_date_range_indexed``: the DataFrame already
+    carries the residual row filters (exact semantics, not a superset);
+    the file counts expose the skipping for tests/telemetry to pin."""
 
     df: DataFrame
     n_files_read: int
@@ -121,23 +96,43 @@ def indexed_read(
     """
     if not ranges:
         raise ValueError("at least one column range required")
-    cols = list(ranges)
-    idx = index if index is not None else build_stats_index(spark, path, cols)
-    idx = idx.localCheckpoint()  # pin: prune + count read the same stats
-    total = idx.count()
-    keep = idx
-    for c, (lo, hi) in ranges.items():
-        keep = keep.filter(
-            (F.col(f"max_{c}").isNull() | (F.col(f"max_{c}") >= lo))
-            & (F.col(f"min_{c}").isNull() | (F.col(f"min_{c}") <= hi))
-        )
-    files = [r["file"] for r in keep.select("file").collect()]
-    if not files:
-        df = spark.read.parquet(path).limit(0)
-    else:
-        df = spark.read.parquet(*files)
+    scan = _pruned_scan(spark, path, ranges, index)
+    df = scan.df
     for c, (lo, hi) in ranges.items():  # residual: exact, pushes down
         df = df.filter((F.col(c) >= lo) & (F.col(c) <= hi))
     if columns:
         df = df.select(*columns)
-    return PrunedScan(df, len(files), total)
+    return scan._replace(df=df)
+
+
+def _pruned_scan(
+    spark: SparkSession,
+    path: str,
+    ranges: dict[str, tuple],
+    index: DataFrame | None,
+) -> PrunedScan:
+    """Kept files read WITHOUT the residual filter, plus the file
+    counts. A file is kept when its [min, max] overlaps every CLOSED
+    (lo, hi) in ``ranges``; NULL-stat files are conservatively kept.
+
+    One job: a single ``collect`` of (file, keep) over the index — one
+    row per file, so bounded by file count — yields both the kept list
+    and the total, and the schema ``build_stats_index`` records on the
+    ``file`` column spares the kept-file read its footer-inference job.
+    """
+    idx = index if index is not None else build_stats_index(
+        spark, path, list(ranges)
+    )
+    keep = F.lit(True)
+    for c, (lo, hi) in ranges.items():
+        keep &= (F.col(f"max_{c}").isNull() | (F.col(f"max_{c}") >= lo)) & (
+            F.col(f"min_{c}").isNull() | (F.col(f"min_{c}") <= hi)
+        )
+    rows = idx.select("file", keep.alias("keep")).collect()
+    files = [r["file"] for r in rows if r["keep"]]
+    schema = idx.schema["file"].metadata.get("schema")
+    reader = spark.read
+    if schema:
+        reader = reader.schema(StructType.fromJson(schema))
+    df = reader.parquet(*files) if files else reader.parquet(path).limit(0)
+    return PrunedScan(df, len(files), len(rows))

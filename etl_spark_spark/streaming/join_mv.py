@@ -38,6 +38,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..concurrency import run_concurrently
+
 
 def _path_exists(spark: SparkSession, path: str) -> bool:
     """Filesystem-agnostic existence probe via the Hadoop FS API (works
@@ -275,25 +277,6 @@ def _append_partition(df: DataFrame, batch_id: int, path: str) -> None:
     )
 
 
-def _concurrently(*thunks):
-    """Overlap this fold's independent actions (round-13, guide §2.6;
-    canonical helper: ``etl_spark_spark.concurrency.run_concurrently``).
-    Each per-batch state write is its own scheduler job whose FIXED
-    cost (~100-200 ms of AQE/stage bookkeeping at fixture scale;
-    round-13 profile: join_mv_temporal ran 53 jobs carrying 1.0 s of
-    task work under a 3.6 s wall) is paid serially when the driver
-    calls actions one after another. The per-fold writes (left / right
-    / view) and the two batch-input pins are mutually independent: the
-    view delta reads only the CHECKPOINTED batch inputs plus history
-    partitions STRICTLY BELOW this batch id — listed before any write
-    starts, and excluded by the ``__batch_id < batch_id`` filter even
-    if re-listed — so overlapping them costs max() instead of sum()
-    and cannot change any row written."""
-    from ..concurrency import run_concurrently
-
-    return run_concurrently(*thunks)
-
-
 def apply_join_batch(
     batch_left: DataFrame,
     batch_right: DataFrame,
@@ -314,10 +297,19 @@ def apply_join_batch(
     v_path = f"{state_path}/view"
 
     # pin the batch inputs: each side is referenced by two delta terms
-    # and then appended — one materialization keeps them consistent
-    # (the two pins and the three state writes below each run as
-    # overlapped driver threads — see _concurrently)
-    bl, br = _concurrently(
+    # and then appended — one materialization keeps them consistent.
+    # The two pins, and then the three state writes (left / right /
+    # view), run as overlapped driver threads: each is its own job whose
+    # FIXED scheduler cost (~100-200 ms of AQE/stage bookkeeping at
+    # fixture scale) would otherwise be paid serially. They are
+    # mutually independent: the view delta reads only the CHECKPOINTED
+    # batch inputs plus history partitions STRICTLY BELOW this batch
+    # id — listed before any write starts, and excluded by the
+    # ``__batch_id < batch_id`` filter even if re-listed — so the
+    # overlap costs max() instead of sum() and cannot change any row
+    # written. The other path-based folds below overlap on the same
+    # argument.
+    bl, br = run_concurrently(
         batch_left.localCheckpoint, batch_right.localCheckpoint
     )
 
@@ -330,7 +322,7 @@ def apply_join_batch(
     if l_prev is not None:
         dv = dv.unionByName(l_prev.join(br, on))
 
-    _concurrently(
+    run_concurrently(
         lambda: _append_partition(bl, batch_id, l_path),
         lambda: _append_partition(br, batch_id, r_path),
         lambda: _append_partition(dv, batch_id, v_path),
@@ -443,7 +435,7 @@ def apply_join_batch_bucketed(
     spark = batch_left.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     on = list(on)
-    bl, br = _concurrently(
+    bl, br = run_concurrently(
         batch_left.localCheckpoint, batch_right.localCheckpoint
     )
     # NOTE: unlike the path-based forms, the three writes below stay
@@ -600,7 +592,7 @@ def apply_join_batch_temporal(
             )
         return pinned, (None if row["m"] is None else int(row["m"]))
 
-    (bl, max_l), (br, max_r) = _concurrently(
+    (bl, max_l), (br, max_r) = run_concurrently(
         lambda: _pin_and_stats(batch_left, ts_left),
         lambda: _pin_and_stats(batch_right, ts_right),
     )
@@ -623,7 +615,7 @@ def apply_join_batch_temporal(
     if l_prev is not None:
         dv = dv.unionByName(_bjoin(l_prev, br))
 
-    _concurrently(
+    run_concurrently(
         lambda: _append_partition(bl, batch_id, l_path),
         lambda: _append_partition(br, batch_id, r_path),
         lambda: _append_partition(dv, batch_id, v_path),
@@ -1001,7 +993,7 @@ def apply_join_batch_z(
             df = df.withColumn(MULT_COL, F.lit(1).cast("long"))
         return df.withColumn(MULT_COL, F.col(MULT_COL).cast("long"))
 
-    bl, br = _concurrently(
+    bl, br = run_concurrently(
         lambda: _signed(batch_left).localCheckpoint(),
         lambda: _signed(batch_right).localCheckpoint(),
     )
@@ -1026,7 +1018,7 @@ def apply_join_batch_z(
     if l_prev is not None:
         dv = dv.unionByName(_zjoin(l_prev, br))
 
-    _concurrently(
+    run_concurrently(
         lambda: _append_partition(bl, batch_id, l_path),
         lambda: _append_partition(br, batch_id, r_path),
         lambda: _append_partition(dv, batch_id, v_path),

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from etl_spark_spark.sinks.write import write_range_sorted
 from etl_spark_spark.sources.stats_index import (
     build_stats_index,
-    pruned_parquet_read,
+    indexed_read,
 )
 
 
@@ -22,51 +22,20 @@ def _fixture(spark, path: str) -> None:
     write_range_sorted(df, path, ["id"], num_files=8)
 
 
-def test_pruned_read_equals_full_filter_and_skips_files(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _fixture(spark, path)
-    lo, hi = 2_000, 2_999
-    got, n_read, n_total = pruned_parquet_read(spark, path, "id", lo, hi)
-    got_rows = got.filter(F.col("id").between(lo, hi))  # residual filter
-    want = (
-        spark.read.parquet(path).filter(F.col("id").between(lo, hi))
-    )
-    assert got_rows.count() == want.count() == 1000
-    assert (
-        got_rows.agg(F.sum("v")).collect()[0][0]
-        == want.agg(F.sum("v")).collect()[0][0]
-    )
-    # range-sorted into 8 files: a 10% slice must not touch all files
-    assert n_total >= 4
-    assert 1 <= n_read < n_total
-
-
-def test_pruned_read_empty_range(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _fixture(spark, path)
-    got, n_read, n_total = pruned_parquet_read(spark, path, "id", 50_000, 60_000)
-    assert n_read == 0 and got.count() == 0
-    assert [f.name for f in got.schema.fields] == ["id", "k", "v"]
-
-
 def test_reusable_index_and_conservative_nulls(spark, tmp_path):
     path = str(tmp_path / "t")
     _fixture(spark, path)
     idx = build_stats_index(spark, path, ["id"]).localCheckpoint()
     # same index reused across reads: no extra stats scans needed
     for lo, hi, n in [(0, 99, 100), (9_900, 9_999, 100), (0, 9_999, 10_000)]:
-        df, n_read, n_total = pruned_parquet_read(
-            spark, path, "id", lo, hi, index=idx
-        )
-        assert df.filter(F.col("id").between(lo, hi)).count() == n
+        scan = indexed_read(spark, path, {"id": (lo, hi)}, index=idx)
+        assert scan.df.count() == n
     # a file with NULL stats is kept, never skipped
     null_idx = idx.withColumn("min_id", F.lit(None).cast("long")).withColumn(
         "max_id", F.lit(None).cast("long")
     )
-    _, n_read, n_total = pruned_parquet_read(
-        spark, path, "id", 0, 10, index=null_idx
-    )
-    assert n_read == n_total
+    scan = indexed_read(spark, path, {"id": (0, 10)}, index=null_idx)
+    assert scan.n_files_read == scan.n_files_total
 
 
 def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
@@ -76,10 +45,6 @@ def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
     spans the full y range). Also pins correctness: pruning + residual
     filter returns exactly the full-scan answer on both layouts."""
     from etl_spark_spark.sinks.zorder import write_zordered
-    from etl_spark_spark.sources.stats_index import (
-        build_stats_index,
-        prune_files,
-    )
 
     df = spark.range(64_000).select(
         F.pmod(F.xxhash64("id"), F.lit(1024)).alias("x"),
@@ -96,24 +61,24 @@ def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
     assert n_files == 16 and ridx.count() == 16
 
     lo, hi = 0, 127  # a 1/8 slice of either dimension
-    zx, zy = prune_files(zidx, "x", lo, hi), prune_files(zidx, "y", lo, hi)
-    rx, ry = prune_files(ridx, "x", lo, hi), prune_files(ridx, "y", lo, hi)
+
+    def kept(path, idx, col):
+        return indexed_read(spark, path, {col: (lo, hi)}, index=idx)
+
+    zx, zy = kept(zpath, zidx, "x"), kept(zpath, zidx, "y")
+    rx, ry = kept(rpath, ridx, "x"), kept(rpath, ridx, "y")
     # z-order discriminates on BOTH columns
-    assert len(zx) <= n_files // 2, f"zorder x kept {len(zx)}/{n_files}"
-    assert len(zy) <= n_files // 2, f"zorder y kept {len(zy)}/{n_files}"
+    assert zx.n_files_read <= n_files // 2, f"zorder x kept {zx.n_files_read}"
+    assert zy.n_files_read <= n_files // 2, f"zorder y kept {zy.n_files_read}"
     # range-sorted-by-x: strong on x, useless on y (every file kept)
-    assert len(rx) <= n_files // 4
-    assert len(ry) == n_files
-    # pruning is a correctness-preserving superset on the z layout
+    assert rx.n_files_read <= n_files // 4
+    assert ry.n_files_read == n_files
+    # pruning is a correctness-preserving superset on the z layout: the
+    # kept files hold every matching row
     want = df.filter(F.col("y").between(lo, hi)).agg(
         F.sum("v"), F.count("*")
     ).collect()[0]
-    got = (
-        spark.read.parquet(*zy)
-        .filter(F.col("y").between(lo, hi))
-        .agg(F.sum("v"), F.count("*"))
-        .collect()[0]
-    )
+    got = zy.df.agg(F.sum("v"), F.count("*")).collect()[0]
     assert tuple(got) == tuple(want)
 
 
@@ -198,6 +163,44 @@ def test_read_date_range_indexed_prunes_and_is_exact(spark, tmp_path):
         ).count()
         == 0
     )
+
+
+def test_pinned_index_prunes_in_one_job(spark, tmp_path):
+    """With the index pinned up front, pruning is ONE job (a single
+    collect of the file-count-sized index) and the kept-file read
+    starts none of its own: the caller's first action is the next job."""
+    import datetime as dt
+
+    from etl_spark_spark.sources.parquet import read_date_range_indexed
+
+    df = spark.range(10_000).select(
+        F.col("id"),
+        F.date_add(
+            F.lit("1995-01-01").cast("date"), (F.col("id") % 300).cast("int")
+        ).alias("d"),
+    )
+    path = str(tmp_path / "t")
+    write_range_sorted(df, path, ["d"], num_files=8)
+    idx = build_stats_index(spark, path, ["d"]).localCheckpoint()
+    lo, hi = dt.date(1995, 2, 1), dt.date(1995, 2, 7)
+    reads = {
+        "indexed_read": lambda: indexed_read(
+            spark, path, {"d": (lo, hi)}, index=idx
+        ),
+        "read_date_range_indexed": lambda: read_date_range_indexed(
+            spark, path, "d", lo, hi, index=idx
+        ),
+    }
+    sc = spark.sparkContext
+    try:
+        for name, read in reads.items():
+            group = f"one_job_{name}"
+            sc.setJobGroup(group, group)
+            scan = read()
+            assert 1 <= scan.n_files_read < scan.n_files_total == 8
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, name
+    finally:
+        sc.setJobGroup(None, None)
 
 
 def test_indexed_read_empty_and_validation(spark, tmp_path):

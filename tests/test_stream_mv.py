@@ -1042,9 +1042,10 @@ def test_rollup_checkpoint_restart_fence_prevents_double_count(
 def test_run_concurrently_orders_results_and_propagates_errors(spark):
     """The round-13 fold overlap (etl_spark_spark.concurrency) must
     return results in thunk order — the join-MV folds unpack
-    ``bl, br = _concurrently(...)`` positionally — and must join every
-    thread before re-raising the first failure, so a crashed fold
-    leaves no state write silently running behind the caller."""
+    ``bl, br = run_concurrently(...)`` positionally — and must join
+    every thread before re-raising the lowest-index failure (the others
+    chained onto it), so a crashed fold leaves no state write silently
+    running behind the caller."""
     import time
 
     from etl_spark_spark.concurrency import run_concurrently
@@ -1071,6 +1072,21 @@ def test_run_concurrently_orders_results_and_propagates_errors(spark):
     with _pytest.raises(ValueError, match="injected"):
         run_concurrently(boom, other)
     assert finished["b"], "all threads must be joined before re-raising"
+
+    # two failures, the LATER thunk failing first: the lowest-index
+    # error is raised, the other is chained onto it, not dropped
+    def late_first():
+        time.sleep(0.2)
+        raise ValueError("thunk 0")
+
+    def early_second():
+        raise RuntimeError("thunk 1")
+
+    with _pytest.raises(ValueError, match="thunk 0") as info:
+        run_concurrently(late_first, early_second)
+    group = info.value.__context__
+    assert isinstance(group, BaseExceptionGroup)
+    assert [str(ex) for ex in group.exceptions] == ["thunk 1"]
 
     # and it actually overlaps Spark jobs: two concurrent counts finish
     # in well under the serial sum on an idle local scheduler
